@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.ts is TIMESTAMP_NTZ; queries cast it to (ltz) timestamp,
-      // exact only under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // absorb one-time session costs (codegen warmup, parquet footer reads,
     // UDF registration) so the first measured query isn't inflated
     try {
@@ -108,12 +99,12 @@ object Bench {
               case _ => Map.empty[String, Double]
             }
             if (c > 0 && qsH.nonEmpty && histSf.contains(runSf) &&
-                histCpus.contains(cpus.toInt))
+                histCpus.contains(cpus))
               Some(Hist(c, cp, cpb, cpbPar, qsH))
             else {
               if (!histSf.contains(runSf))
                 System.err.println(s"[bench] history $p skipped: sf ${histSf.orNull} != $runSf")
-              else if (!histCpus.contains(cpus.toInt))
+              else if (!histCpus.contains(cpus))
                 System.err.println(s"[bench] history $p skipped: cpus ${histCpus.getOrElse("absent")} != $cpus")
               None
             }
@@ -463,7 +454,7 @@ object Bench {
         // the earlier one's history entry (r18's 8-cpu run overwrote the
         // 32-cpu entry for the round). History loading already keys on
         // the cpus field INSIDE each file; only the filename collided.
-        val archName = if (cpus.toInt == 32) f"bench_r${lastRound + 1}%02d.json"
+        val archName = if (cpus == 32) f"bench_r${lastRound + 1}%02d.json"
                        else f"bench_r${lastRound + 1}%02d_c$cpus.json"
         java.nio.file.Files.write(
           histDir.resolve(archName),

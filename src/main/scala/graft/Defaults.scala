@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.codec.{Codec, Pbkdf2Codec}
-import graft.functions.{MaskUdfs, Vocab}
+import graft.functions.MaskUdfs
 
 /** Session wiring for DRIVER-RUN entry points ONLY (Verify/Bench run with no
   * env configured). Env vars win when present; otherwise a fixed test profile
@@ -29,11 +29,5 @@ object Defaults {
     if (sys.env.contains("ETL_CONF_MASK_DATA_CODEC")) Codec.fromEnv else new Pbkdf2Codec(1024, 64)
 
   /** Register every graft SQL function on the session (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
-    val c = codec
-    val pp = passphrase
-    MaskUdfs.register(spark, c, pp)
-    Vocab.register(spark, c, pp)
-    graft.functions.Fpe.register(spark, pp)
-  }
+  def registerAll(spark: SparkSession): Unit = MaskUdfs.register(spark, codec, passphrase)
 }

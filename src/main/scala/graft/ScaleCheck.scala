@@ -446,7 +446,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // the generation suffix versions the cached scaled tables: bump it
     // whenever the generation logic changes (g2 = per-copy embedding label
     // shift; g3 = reversal-composed rotation past 26 copies; g4 =
@@ -455,13 +455,7 @@ object ScaleCheck {
     // target/scaleN dir would silently keep the OLD generation's data and
     // the measurement would contradict the documented methodology
     val scaledDir = s"target/scale$scale-g4"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // surface the per-round convergence log (`graft.cc round=N changed=M
     // ms=T`) — rounds-to-convergence at 1x vs SCALEx is the evidence that
     // the iteration count, not just per-round cost, stays flat
@@ -471,7 +465,7 @@ object ScaleCheck {
 
     if (!new java.io.File(s"$scaledDir/documents.parquet").exists()) {
       documentCopies(spark.read.parquet(s"$baseDir/documents.parquet"), scale)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
     }
     if (!new java.io.File(s"$scaledDir/embeddings.parquet").exists()) {
@@ -489,13 +483,13 @@ object ScaleCheck {
           .withColumn("label", col("label") + lit(k * 100000))
       }
       copies.reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/embeddings.parquet")
     }
 
     if (!new java.io.File(s"$scaledDir/events.parquet").exists()) {
       eventCopies(spark.read.parquet(s"$baseDir/events.parquet"), scale)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/events.parquet")
     }
 
@@ -510,7 +504,7 @@ object ScaleCheck {
           .withColumn("c_name",
             if (k == 0) col("c_name") else concat(col("c_name"), lit(s"#c$k")))
       }.reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/customer.parquet")
     }
 
@@ -626,7 +620,7 @@ object StreamScaleCheck {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val slices = sys.env.getOrElse("SPARK_GRAFT_SLICES", "10").toInt
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb swaps the default on-heap
     // HDFSBackedStateStore for the disk-backed RocksDB provider — the
@@ -636,16 +630,10 @@ object StreamScaleCheck {
     // Same semantics, same progress metrics — memoryUsedBytes then
     // reports the RocksDB memtable+cache footprint, not row bytes.
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 8) // state stores = stores x partitions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb") builder.config(
+    val spark = GraftSession.local(cpus, 8) // state stores = stores x partitions
+    if (provider == "rocksdb") spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // time-sliced feed: K equal event-time slices of the SCALEx table,
     // one file each, modification times ascending so the file source

@@ -49,6 +49,33 @@ class MaskUdfsSpec extends AnyFunSuite {
     assert(row.isNullAt(3) && row.isNullAt(4) && row.isNullAt(5))
   }
 
+  test("date / timestamp masks are identical under either java8API setting") {
+    val key = "spark.sql.datetime.java8API.enabled"
+    val saved = spark.conf.getOption(key)
+    def masked(java8: Boolean): Seq[String] = {
+      spark.conf.set(key, java8.toString)
+      registered()
+      spark.sql(
+        """SELECT
+          |  CAST(mask_date(14, true, DATE '2016-12-18') AS STRING),
+          |  CAST(mask_date(30, true, DATE '1969-07-20') AS STRING),
+          |  CAST(mask_timestamp(14, true, TIMESTAMP '2016-12-18 21:46:54') AS STRING),
+          |  CAST(mask_timestamp(30, true, TIMESTAMP '1969-07-20 20:17:40.5') AS STRING),
+          |  CAST(mask_date_det(14, DATE '2016-12-18') AS STRING),
+          |  CAST(mask_timestamp_det(14, TIMESTAMP '2016-12-18 21:46:54') AS STRING),
+          |  CAST(mask_date(14, true, null) AS STRING)
+          |""".stripMargin).collect()(0).toSeq.map(v => String.valueOf(v))
+    }
+    try {
+      val (on, off) = (masked(java8 = true), masked(java8 = false))
+      assert(on === off)
+      assert(on.init.forall(_ != "null") && on.last === "null")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("masking composes with built-ins (date_trunc) like the reference suite") {
     registered()
     val row = spark.sql(
